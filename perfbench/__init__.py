@@ -1,0 +1,1 @@
+"""meteo-spark benchmark: see README.md; run with ``python3 perfbench/run.py``."""
